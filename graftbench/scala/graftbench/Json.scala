@@ -1,0 +1,35 @@
+package graftbench
+
+/** Minimal JSON encoder for the run's output lines. Values are String,
+  * Boolean, Int, Long, Double, Option, Iterable and Map. */
+object Json {
+  def str(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '\r' => b ++= "\\r"
+      case '\t' => b ++= "\\t"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    (b += '"').toString
+  }
+
+  def apply(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => apply(x)
+    case s: String => str(s)
+    case b: Boolean => b.toString
+    case d: Double =>
+      require(!d.isNaN && !d.isInfinite, s"non-finite number $d")
+      d.toString
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => str(k.toString) + ":" + apply(x) }.mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(apply).mkString("[", ",", "]")
+    case other => str(other.toString)
+  }
+}
